@@ -22,7 +22,8 @@ object Bench {
         Some(e.getMessage)
       }
     // Warm up the JVM/codegen/file-listing paths once so the first timed
-    // query isn't charged ~10 s of JIT + Spark bootstrap.
+    // query isn't charged ~10 s of JIT + Spark bootstrap. Best-effort:
+    // a failed warm-up only moves that cost onto the first timed gate.
     try {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       li.groupBy("l_returnflag").count().count()
@@ -77,28 +78,13 @@ object Bench {
     val noopGates = Set("q81_hash_split", "q216_substr_remove",
       "q219_collapse_repeats", "q222_vocab_prune")
     val samples = (1 to reps).map { pass =>
-      if (pass > 1) {
-        ext.Dedup.clearMemos()
-        ext.Similarity.clearMemos()
-        ext.Quantize.clearMemos()
-        ext.Winnow.clearMemos()
-        ext.PageRank.clearMemos()
-        ext.Selection.clearMemos()
-        ext.Pipeline.clearMemos()
-        // NOT Bucketing.clearWriteMemo(): the bucket layout's cost model
-        // is write-once-amortize-forever, and the write is timed as its
-        // own bucket_write_sec line item below — clearing it per pass
-        // (round 8) charged every q149 sample the one-time layout build
-        // and made the certified zero-shuffle join look like the worst
-        // query in the subtotal.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // release the streaming gates' memory-sink row buffers — they
-        // accumulate across passes otherwise (one full output per gate
-        // per pass pinned on the driver heap)
-        streaming.Streams.dropBoundedSinks(spark)
-      }
+      // The bucket layout survives the sweep: its cost model is
+      // write-once-amortize-forever, and the write is timed as its own
+      // bucket_write_sec line item below — rewriting it per pass
+      // (round 8) charged every q149 sample the one-time layout build
+      // and made the certified zero-shuffle join look like the worst
+      // query in the subtotal.
+      if (pass > 1) ext.Memo.clearAll(spark)
       names.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // Rewrite gates (one output row per input row) are timed

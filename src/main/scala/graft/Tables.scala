@@ -69,11 +69,6 @@ object Tables {
     if (boundedDims(name)) org.apache.spark.sql.functions.broadcast(df) else df
   }
 
-  /** Register every table as a temp view (for spark.sql-based queries).
-    * View names match the DuckDB oracle's table names. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** Pinned testdata contract: the DDL each table must present AFTER
     * loading (post ts-normalization for events). The driver regenerated
     * the testdata mid-project once (events.ts NANOS→MICROS) and the only

@@ -76,25 +76,34 @@ object ConnectedComponents {
     var edges: E = p0.filter { case (a, b) => a != b }
       .map { case (a, b) => (math.max(a, b), math.min(a, b)) }
       .distinct(part.numPartitions).persist(StorageLevel.MEMORY_AND_DISK)
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      val afterLarge = star(symmetrize(edges, part), part, large = true)
-      val next = star(symmetrize(afterLarge, part), part, large = false)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // converged when the canonical edge set is a fixpoint: same count
-      // and no edge outside the previous set (subtract on the smaller
-      // of the two directions suffices since counts match)
-      val stable = next.count() == edges.count() &&
-        next.subtract(edges, part.numPartitions).isEmpty()
+    var next = edges
+    try {
+      var round = 0
+      var converged = false
+      while (round < maxRounds && !converged) {
+        val afterLarge = star(symmetrize(edges, part), part, large = true)
+        next = star(symmetrize(afterLarge, part), part, large = false)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        // converged when the canonical edge set is a fixpoint: same count
+        // and no edge outside the previous set (subtract on the smaller
+        // of the two directions suffices since counts match)
+        val stable = next.count() == edges.count() &&
+          next.subtract(edges, part.numPartitions).isEmpty()
+        edges.unpersist(blocking = false)
+        edges = next
+        converged = stable
+        round += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"alternatingStarLabels did not converge in $maxRounds rounds")
+    } catch { case e: Throwable =>
+      // a failed run leaves none of its persisted RDDs behind
+      nodes.unpersist(blocking = false)
       edges.unpersist(blocking = false)
-      edges = next
-      converged = stable
-      round += 1
+      next.unpersist(blocking = false)
+      throw e
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"alternatingStarLabels did not converge in $maxRounds rounds")
     // star form: every non-root points straight at its component min
     val labels = symmetrize(edges, part)
       .reduceByKey(part, math.min(_: Long, _: Long))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.Tables
 import graft.functions.SimHash64
 
@@ -205,12 +206,12 @@ object Dedup {
     if (!collapseDecision.getOrElse(
           shouldCollapse(spark, dupFraction(docs, Nil)))) {
       val sh = shingledOf(docs)
-        .transform(TrackedPersist.persistTracked)
+        .persist(MEMORY_AND_DISK)
       verifiedLshPairs(spark, docs, sh, threshold)
     } else collapseExpand(docs, Nil, Seq("jaccard" -> lit(1.0)),
       intraQualifies = threshold <= 1.0, repDocs => {
         val shR = shingledOf(repDocs)
-          .transform(TrackedPersist.persistTracked)
+          .persist(MEMORY_AND_DISK)
         // groups whose docs are too short to shingle produce NO pairs
         // in the direct pipeline (they never enter sh) — shR's doc ids
         // are the eligible set
@@ -231,18 +232,17 @@ object Dedup {
     * `probeSampleFraction` is never served after the knob changes, and
     * a later full-scan read never inherits a sampled (downward-biased)
     * value. */
-  private[ext] val dupFracCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double, Long, String), Double]()
+  private[ext] val dupFracMemo =
+    Memo.Family[(String, Double, Long, String), Double]("dedup.dupFraction")
   private[graft] def dupFractionDir(spark: SparkSession, dir: String,
                                     extraKeys: Seq[String]): Double = {
-    sweepStopped(dupFracCache)(_._1)
     val scopeKey = extraKeys.mkString(",")
     val frac = effectiveSampleFrac(spark).getOrElse(1.0)
     // the exact-fallback threshold is part of the key: a probe taken
     // under one threshold (HLL-only vs exact path) must never be
     // served after the knob changes
     val thr = exactProbeThreshold(spark)
-    dupFracCache.get((spark, dir, frac, thr, scopeKey)).getOrElse {
+    dupFracMemo.get(spark, (dir, frac, thr, scopeKey)) {
       val docs = Tables.load(spark, dir, "documents")
       // the caller's scope is a hard requirement — failing loudly here
       // beats the NoSuchElementException a silent filter would produce
@@ -260,10 +260,12 @@ object Dedup {
       // scopes are still dropped when their columns are absent.
       val scopes = (Seq(Seq.empty[String], Seq("source")) :+ extraKeys)
         .distinct.filter(_.forall(docs.columns.contains))
-      dupFractions(spark, docs, scopes).foreach { case (sc, f) =>
-        dupFracCache.put((spark, dir, frac, thr, sc.mkString(",")), f)
+      val fracs = dupFractions(spark, docs, scopes)
+        .map { case (sc, f) => sc.mkString(",") -> f }.toMap
+      fracs.foreach { case (sc, f) =>
+        if (sc != scopeKey) dupFracMemo.get(spark, (dir, frac, thr, sc))(f)
       }
-      dupFracCache((spark, dir, frac, thr, scopeKey))
+      fracs(scopeKey)
     }
   }
   private def dupFraction(docs: DataFrame, extraKeys: Seq[String]): Double =
@@ -416,7 +418,7 @@ object Dedup {
       .filter(joinKeys.map(col(_).isNotNull).reduce(_ && _))
       .withColumn("gid", min(col("doc_id")).over(w))
       .select(col("gid"), col("doc_id"))
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     // a representative is a doc that IS its group's minimum
     val repDocs = docs.join(
       members.filter(col("gid") === col("doc_id"))
@@ -495,7 +497,7 @@ object Dedup {
     // one signature pass feeds BOTH the AMS estimate and the band join
     // (skinny frame: doc_id + 32 longs)
     val sig = signatures(sh)
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val cand = candidatePairsOfSig(sig)
     // Broadcast-vs-shuffle for the verify joins, decided from
     // ESTIMATES, not a post-hoc AQE rescue: candidate count from the
@@ -581,20 +583,20 @@ object Dedup {
       Seq("m" -> lit(32L), "est_cont" -> lit(1.0)),
       intraQualifies = true, repDocs => {
         val shR = shingledOf(repDocs)
-          .transform(TrackedPersist.persistTracked)
+          .persist(MEMORY_AND_DISK)
         (containmentEstimateOver(shR), shR.select(col("doc_id")))
       })
   }
 
   private def containmentEstimateOf(docs: DataFrame): DataFrame =
     containmentEstimateOver(shingledOf(docs)
-      .transform(TrackedPersist.persistTracked))
+      .persist(MEMORY_AND_DISK))
 
   private def containmentEstimateOver(sh: DataFrame): DataFrame = {
     // shared signature pass: the m-matching joins below AND the band
     // join inside candidatePairsOfSig read the same persisted frame
     val sig = signatures(sh)
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     candidatePairsOfSig(sig)
       .join(sig.select(col("doc_id").as("a_id"), col("sig").as("siga")),
             "a_id")
@@ -614,18 +616,14 @@ object Dedup {
   }
 
   /** Memoized [[containmentEstimate]] — the q26/q103 pattern: one
-    * computation + persist per (session, dir), drained by
-    * [[clearMemos]], so repeated gate runs in a long-lived session
-    * never accumulate dead shingle-table persists. */
-  private val containEstCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+    * computation + persist per (session, dir). */
+  private val containEstMemo =
+    Memo.Family[String, DataFrame]("dedup.containmentEstimate")
   def containmentEstimateCached(spark: SparkSession,
-                                dir: String): DataFrame = {
-    sweepStopped(containEstCache)(_._1)
-    containEstCache.getOrElseUpdate((spark, dir, 0.0),
+                                dir: String): DataFrame =
+    containEstMemo.get(spark, dir)(
       materializedScoped(spark, dir, BandPathExpansion)(
         containmentEstimate(spark, dir)))
-  }
 
   // ---- data-derived shuffle sizing for the pair families -----------
   //
@@ -670,59 +668,14 @@ object Dedup {
     * persisting is the cluster-scale pattern (materialize the shared
     * stage), and it keeps `dedupedCorpus` from re-running the whole
     * shingle→signature→band pipeline the pair query already ran. */
-  private val pairsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
-
-  /** Drop memo entries whose session has been stopped — their cached
-    * blocks are already gone, and without the sweep a JVM that creates
-    * and stops many sessions (test suites, notebooks) would retain a
-    * DataFrame + session reference per stopped session forever. Swept
-    * lazily on every memo access; the maps hold a handful of entries. */
-  private def sweepStopped[K, V](
-      m: scala.collection.concurrent.TrieMap[K, V])
-      (session: K => SparkSession): Unit =
-    m.keys.foreach { k =>
-      if (session(k).sparkContext.isStopped) m.remove(k)
-    }
-
-  /** Drop every memoized pair table and its cached blocks (benchmark
-    * harness hook: lets a measurement pass start from the same no-cache
-    * state a fresh session would). */
-  def clearMemos(): Unit = {
-    (pairsCache.values ++ exactPairsCache.values ++ containCache.values ++
-      containEstCache.values).foreach { df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-    pairsCache.clear()
-    exactPairsCache.clear()
-    containCache.clear()
-    containEstCache.clear()
-    // label-prop result RDDs are registered in persistedLabelRdds by
-    // clusterLabels — drain them here so a cold pass drops the blocks
-    // even when the caller does not sweep getPersistentRDDs
-    var rdd = persistedLabelRdds.poll()
-    while (rdd != null) {
-      try rdd.unpersist(blocking = false) catch { case _: Throwable => () }
-      rdd = persistedLabelRdds.poll()
-    }
-    labelsCache.clear()
-    // dup-probe memo too: cold-run timings must include the probe
-    dupFracCache.clear()
-    // inner persists (shingle/signature/feature frames) — unpersisting
-    // the memoized frames above does NOT release these
-    TrackedPersist.clear()
-  }
+  private val pairsMemo =
+    Memo.Family[(String, Double), DataFrame]("dedup.minhashPairs")
 
   def minhashLshCached(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5): DataFrame = {
-    // keyed by the session too (reference identity): a DataFrame is bound
-    // to its session, so a memo hit from a different/stopped session
-    // would fail or reuse stale plans — each session builds its own entry
-    sweepStopped(pairsCache)(_._1)
-    pairsCache.getOrElseUpdate((spark, dir, threshold),
+                       threshold: Double = 0.5): DataFrame =
+    pairsMemo.get(spark, (dir, threshold))(
       materializedScoped(spark, dir, BandPathExpansion)(
         minhashLsh(spark, dir, threshold)))
-  }
 
   // ---- SimHash ------------------------------------------------------
 
@@ -779,7 +732,7 @@ object Dedup {
         // one fingerprint pass, persisted, shared by the candidate join
         // and the eligibility set (same discipline as minhash's shR)
         val shS = simhashesOf(repDocs)
-          .transform(TrackedPersist.persistTracked)
+          .persist(MEMORY_AND_DISK)
         (simhashPairsOver(shS, maxHam, np),
          shS.filter(col("simhash").isNotNull).select(col("doc_id")))
       })
@@ -865,7 +818,7 @@ object Dedup {
               graft.functions.HashShingles.shingles(
                 split(TextAnalysis.normalized(col("text")), " "), 1).as("ws"))
       .withColumn("n", size(col("ws")))
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val toks = docs.select(col("doc_id"), col("source"), col("n"),
                            explode(col("ws")).as("token"))
     val dfreq = toks.groupBy(col("token"))
@@ -943,7 +896,7 @@ object Dedup {
     // persisted: the budget sketch below plus BOTH sides of the
     // candidate self-join read it — three consumers of one
     // tokenize+window pass
-    val prefixes = prefixes0.transform(TrackedPersist.persistTracked)
+    val prefixes = prefixes0.persist(MEMORY_AND_DISK)
     val budget = configuredPairBudget(docs0.sparkSession)
     // Cheap SOUND pre-check before paying for the sketch. The sketch
     // estimate (and the join's real input) is PRE-distinct same-key
@@ -1117,15 +1070,13 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("cont"))
   }
 
-  private val containCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private val containMemo =
+    Memo.Family[(String, Double), DataFrame]("dedup.containmentPairs")
   def containmentPairsCached(spark: SparkSession, dir: String,
-                             threshold: Double = 0.9): DataFrame = {
-    sweepStopped(containCache)(_._1)
-    containCache.getOrElseUpdate((spark, dir, threshold),
+                             threshold: Double = 0.9): DataFrame =
+    containMemo.get(spark, (dir, threshold))(
       materializedScoped(spark, dir, TokenPathExpansion)(
         containmentPairs(spark, dir, threshold)))
-  }
 
   /** DuckDB oracle for [[containmentPairs]]: brute-force same-source
     * containment over the normalized word sets. */
@@ -1209,48 +1160,49 @@ object Dedup {
     // (dst → src), both directions: "dst's label is a candidate for src"
     val edges = p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part).persist(mem)
-    edges.count() // materialize once; the deep pair plan compiles here only
     // every node appears as a dst (edges are symmetric), so the edge keys
     // enumerate the nodes; one map-side-combined reduce seeds label = id
     var labels = edges.map { case (dst, _) => (dst, dst) }
       .reduceByKey(part, math.min(_: Long, _: Long)).persist(mem)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // own label rides along via the union (no self-edges needed):
-      // next(id) = min(label(id), min over neighbors' labels)
-      val next = edges.join(labels)
-        .map { case (_, (src, label)) => (src, label) }
-        .union(labels)
-        .reduceByKey(part, math.min(_: Long, _: Long))
-        .persist(mem)
-      // iteration 1 always changes something on any non-trivial edge set —
-      // skip its convergence probe (one fewer Spark job per call)
-      val changed =
-        if (iter == 0) true
-        else next.join(labels)
-          .filter { case (_, (n, o)) => n != o }.take(1).nonEmpty
+    var next = labels
+    try {
+      edges.count() // materialize once; the deep pair plan compiles here only
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        // own label rides along via the union (no self-edges needed):
+        // next(id) = min(label(id), min over neighbors' labels)
+        next = edges.join(labels)
+          .map { case (_, (src, label)) => (src, label) }
+          .union(labels)
+          .reduceByKey(part, math.min(_: Long, _: Long))
+          .persist(mem)
+        // iteration 1 always changes something on any non-trivial edge
+        // set — skip its convergence probe (one fewer Spark job per call)
+        val changed =
+          if (iter == 0) true
+          else next.join(labels)
+            .filter { case (_, (n, o)) => n != o }.take(1).nonEmpty
+        labels.unpersist(blocking = false)
+        labels = next
+        converged = !changed
+        iter += 1
+      }
+      // Non-convergence must surface, not silently return partial labels:
+      // the exact-oracle gate (q39) compares against a full transitive
+      // closure, so a component with diameter > maxIter would otherwise
+      // produce a silent oracle mismatch.
+      if (!converged)
+        throw new IllegalStateException(
+          s"clusterLabels did not converge within $maxIter iterations — " +
+          "a duplicate chain longer than maxIter exists; raise maxIter")
+    } catch { case e: Throwable =>
+      // a failed run leaves no persisted generation behind; the final
+      // labels of a successful run back the returned frame
       labels.unpersist(blocking = false)
-      labels = next
-      converged = !changed
-      iter += 1
-    }
-    edges.unpersist(blocking = false)
-    // Non-convergence must surface, not silently return partial labels:
-    // the exact-oracle gate (q39) compares against a full transitive
-    // closure, so a component with diameter > maxIter would otherwise
-    // produce a silent oracle mismatch.
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusterLabels did not converge within $maxIter iterations — " +
-        "a duplicate chain longer than maxIter exists; raise maxIter")
-    // the FINAL labels RDD backs the returned frame and stays persisted
-    // for its consumers (labelsCache) — register it for the clearMemos
-    // drain (the PageRank.persistedEdgeRdds pattern) instead of relying
-    // on callers sweeping getPersistentRDDs: probes/specs that clear
-    // Dedup without that sweep would otherwise leak one persisted
-    // labels RDD per cold pass
-    persistedLabelRdds.add(labels)
+      next.unpersist(blocking = false)
+      throw e
+    } finally edges.unpersist(blocking = false)
     spark.createDataFrame(labels.map { case (idNode, label) =>
       org.apache.spark.sql.Row(idNode, label) },
       org.apache.spark.sql.types.StructType(Seq(
@@ -1267,21 +1219,13 @@ object Dedup {
     * one loop in every bench pass; now the first consumer runs it and
     * the rest read the persisted labels). Cleared with the other
     * family memos so cold runs still pay the loop exactly once. */
-  /** Label-prop result RDDs persisted by [[clusterLabels]], drained by
-    * [[clearMemos]] (the PageRank.persistedEdgeRdds pattern). */
-  private val persistedLabelRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]()
-
-  private val labelsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private[ext] val labelsMemo =
+    Memo.Family[(String, Double), DataFrame]("dedup.clusterLabels")
   def clusterLabelsCached(spark: SparkSession, dir: String,
-                          threshold: Double = 0.8): DataFrame = {
-    sweepStopped(labelsCache)(_._1)
-    labelsCache.getOrElseUpdate((spark, dir, threshold),
+                          threshold: Double = 0.8): DataFrame =
+    labelsMemo.get(spark, (dir, threshold))(
       clusterLabels(jaccardPairsCached(spark, dir, threshold)
         .select(col("a_id"), col("b_id"))))
-  }
 
   /** Cluster a pair set and keep the smallest doc_id of each cluster
     * plus every unpaired doc: the surviving doc_ids with their cluster
@@ -1306,33 +1250,31 @@ object Dedup {
   /** Per-(session, dir, threshold) memo of the EXACT prefix-filter pair
     * set (same pattern as [[minhashLshCached]]): the pair gate and the
     * deduped-corpus gate share one computation + persist. */
-  private val exactPairsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private[ext] val exactPairsMemo =
+    Memo.Family[(String, Double), DataFrame]("dedup.jaccardPairs")
   def jaccardPairsCached(spark: SparkSession, dir: String,
-                         threshold: Double = 0.5): DataFrame = {
-    sweepStopped(exactPairsCache)(_._1)
-    exactPairsCache.getOrElseUpdate((spark, dir, threshold), {
+                         threshold: Double = 0.5): DataFrame =
+    exactPairsMemo.get(spark, (dir, threshold)) {
       // a cached set at a LOWER threshold is a strict superset (the
       // prefix filter only ever drops pairs BELOW its threshold), so a
       // higher-threshold request is one filter over the persisted
       // superset instead of a second candidate-generation scan — the
       // q92/q102 0.8-sets derive from the q28/q63 0.5-set for free.
       // (The reverse never holds: a lower threshold must recompute.)
-      val lower = exactPairsCache.keys
-        .filter { case (s, d, t) => s == spark && d == dir && t < threshold }
-        .toSeq.sortBy(_._3).lastOption
+      val lower = exactPairsMemo.keys(spark)
+        .filter { case (d, t) => d == dir && t < threshold }
+        .sortBy(_._2).lastOption.flatMap(exactPairsMemo.peek(spark, _))
       lower match {
-        case Some(key) =>
+        case Some(superset) =>
           // one filter over the persisted superset: no exchange, so no
           // partition-sizing scope needed
-          exactPairsCache(key).filter(col("jac") >= threshold)
-            .transform(TrackedPersist.persistTracked)
+          superset.filter(col("jac") >= threshold)
+            .persist(MEMORY_AND_DISK)
         case None =>
           materializedScoped(spark, dir, TokenPathExpansion)(
             jaccardPairs(spark, dir, threshold))
       }
-    })
-  }
+    }
 
   /** Deduped corpus over the EXACT jaccard pair set (recall exactly 1,
     * unlike the minhash variant) — fully deterministic, so the whole
@@ -1475,7 +1417,7 @@ object Dedup {
               md5(TextAnalysis.normalized(col("text"))).as("fp"))
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"))
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     // representative shingles + signature — identical for every group
     // member, so one row carries the whole group's LSH geometry
     val repIdx = shingledOf(docs.join(
@@ -1508,7 +1450,7 @@ object Dedup {
     * shingles ⇒ identical band keys and jaccard. */
   private[graft] def probeNearDupIndex(index: DataFrame, batch: DataFrame,
                                        threshold: Double): DataFrame = {
-    val idx = index.transform(TrackedPersist.persistTracked)
+    val idx = index.persist(MEMORY_AND_DISK)
     // ONE normalize+md5 pass over the batch, shared by the rep
     // grouping and the final expansion join (it used to be recomputed
     // in the tail projection — a second full scan of the delta per
@@ -1518,7 +1460,7 @@ object Dedup {
     val bAll = batch
       .select(col("doc_id"),
               md5(TextAnalysis.normalized(col("text"))).as("bfp"))
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val bKeyed = bAll.filter(col("bfp").isNotNull)
     val bReps = bKeyed.groupBy(col("bfp"))
       .agg(min(col("doc_id")).as("bmin"))
@@ -1529,7 +1471,7 @@ object Dedup {
       .select(col("bfp"), col("shingles").as("sb"),
         graft.functions.MinHashSig.minhashSig(
           col("shingles"), perms.map(_._1), perms.map(_._2)).as("bsig"))
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     // band keys carry ONLY the fingerprint — the shingle arrays ride
     // the verify joins, keyed by fp, exactly as the direct pipeline
     // keeps them out of its band explode
@@ -1602,8 +1544,8 @@ object Dedup {
                                                 batch: DataFrame,
                                                 threshold: Double)
       : DataFrame = {
-    val shC = shingledOf(corpus).transform(TrackedPersist.persistTracked)
-    val shB = shingledOf(batch).transform(TrackedPersist.persistTracked)
+    val shC = shingledOf(corpus).persist(MEMORY_AND_DISK)
+    val shB = shingledOf(batch).persist(MEMORY_AND_DISK)
     def bandsOf(sh: DataFrame) = signatures(sh)
       .select(col("doc_id"), explode(bandStructs(col("sig"))).as("bk"))
     val cand = bandsOf(shB).as("l")
@@ -1684,7 +1626,7 @@ object Dedup {
     val (corpus, batch1, batch2) = corpusTwoBatches(spark, dir)
     val idx0 = nearDupIndexOf(corpus)
     val probe1 = probeNearDupIndex(idx0, batch1, threshold)
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val admitted = batch1.join(
       probe1.filter(col("novel") === 1L).select("doc_id"),
       Seq("doc_id"), "left_semi")
@@ -2142,23 +2084,6 @@ object Dedup {
        |  CAST(max(n_tokens) AS BIGINT) AS best_tokens
        |FROM j GROUP BY 1""".stripMargin
 
-  /** Sign-LSH-bucketed variant of the same operator (the path when no
-    * coarse cells exist): candidates share a random-hyperplane bucket. */
-  def embeddingNearDupLsh(spark: SparkSession, dir: String,
-                          threshold: Double = 0.3): DataFrame = {
-    val b = Similarity.withBuckets(
-        Tables.load(spark, dir, "embeddings"), col("embedding"))
-      .select(col("vec_id"), col("bucket"),
-              Similarity.l2normalize(col("embedding")).as("nemb"))
-    b.as("l").join(b.as("r"),
-        col("l.bucket") === col("r.bucket") &&
-        col("l.vec_id") < col("r.vec_id"))
-      .withColumn("cos", Similarity.dot(col("l.nemb"), col("r.nemb")))
-      .filter(col("cos") >= threshold)
-      .select(col("l.vec_id").as("a_id"), col("r.vec_id").as("b_id"),
-              col("cos"))
-  }
-
   /** Cross-source near-duplicate overlap matrix: fold any (a_id, b_id)
     * pair set down to per-source-pair counts — the mixture-hygiene audit
     * ("how much of src A re-appears in src B") a pipeline logs before
@@ -2349,7 +2274,7 @@ object Dedup {
                 split(TextAnalysis.normalized(col("text")), " "), n))
                 .as("gram"))
       .distinct()
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val sizes = grams.groupBy(col("source")).agg(count(lit(1)).as("sz"))
     grams.as("a")
       .join(grams.as("b"),

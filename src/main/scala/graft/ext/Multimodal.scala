@@ -219,15 +219,9 @@ object Multimodal {
     * discipline: the layout is built once, every metadata read
     * amortizes it. A Set, not a single slot: alternating dirs (the
     * smoke's 1×/10× loop) must not evict each other's entry and
-    * re-encode the whole layout per call. If the SOURCE testdata is
-    * regenerated mid-session, call [[clearLayoutMemo]] so the fixture
-    * rebuilds from the fresh table. */
+    * re-encode the whole layout per call. */
   private val imageLayoutWritten =
     scala.collection.mutable.Set.empty[(SparkSession, String)]
-
-  /** Drop the image-layout write memo (fixture-freshness hook). */
-  def clearLayoutMemo(): Unit =
-    synchronized { imageLayoutWritten.clear() }
 
   private def imageLayoutPath(dir: String): String =
     graft.Tables.scratchPath("graft_imgtable", dir)

@@ -33,23 +33,6 @@ object PageRank {
   private val Scale = 1000000000L           // 1e9: rank fixed-point scale
   private val Base = 150000000L             // 0.15 · Scale
 
-  /** Every RDD persisted by an iteration loop (edges + the final rank
-    * table), so repeated calls in one JVM (bench passes, correctness
-    * run) can't accumulate dead cached blocks: the harness drains this
-    * between passes, same contract as Dedup.clearMemos. */
-  private val persistedEdgeRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]()
-
-  /** Unpersist every RDD persisted by prior dupPagerank calls. */
-  def clearMemos(): Unit = {
-    var rdd = persistedEdgeRdds.poll()
-    while (rdd != null) {
-      try rdd.unpersist(blocking = false) catch { case _: Throwable => () }
-      rdd = persistedEdgeRdds.poll()
-    }
-  }
-
   /** Integer PageRank over an undirected (a_id, b_id) pair set. Output:
     * (doc_id, rank) for every doc appearing in a pair.
     *
@@ -82,24 +65,25 @@ object PageRank {
       .reduceByKey(part, _ + _)
     val edges = bothDirs.partitionBy(part).join(deg)
       .mapValues { case (dst, d) => (dst, d) }.persist(mem)
-    persistedEdgeRdds.add(edges)
-    edges.count() // materialize once; the pair plan compiles here only
     var ranks = deg // rank₀ = Scale for every node (nodes = edge srcs)
       .mapValues(_ => Scale).persist(mem)
-    // every ranks generation registers BEFORE the loop body runs, so an
-    // exception mid-iteration can never strand a persisted-but-
-    // unregistered RDD (the in-loop unpersist of the predecessor still
-    // runs; a second unpersist from the drain is a no-op)
-    persistedEdgeRdds.add(ranks)
-    for (_ <- 1 to iters) {
-      val next = edges.join(ranks)
-        .map { case (_, ((dst, d), rank)) => (dst, rank / d) }
-        .reduceByKey(part, _ + _)
-        .mapValues(s => Base + 85 * s / 100)
-        .persist(mem)
-      persistedEdgeRdds.add(next)
+    try {
+      edges.count() // materialize once; the pair plan compiles here only
+      for (_ <- 1 to iters) {
+        val next = edges.join(ranks)
+          .map { case (_, ((dst, d), rank)) => (dst, rank / d) }
+          .reduceByKey(part, _ + _)
+          .mapValues(s => Base + 85 * s / 100)
+          .persist(mem)
+        ranks.unpersist(blocking = false)
+        ranks = next
+      }
+    } catch { case e: Throwable =>
+      // a failed build leaves neither the edges nor a rank generation
+      // persisted
+      edges.unpersist(blocking = false)
       ranks.unpersist(blocking = false)
-      ranks = next
+      throw e
     }
     spark.createDataFrame(ranks.map { case (idNode, rank) =>
       org.apache.spark.sql.Row(idNode, rank) },

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.Tables
 
 /** The end-to-end corpus-cleaning pipeline, composed from the individual
@@ -78,38 +79,19 @@ object Pipeline {
     * guide §2.4): q63 and q125 share the whole quality→pairs→label-prop
     * front, but each gate re-ran the iterative propagation loop over
     * the kept-restricted pair set. The first consumer now persists the
-    * (tiny — ≤ |docs| ids) survivor frame and the second reads it.
-    * Cleared by [[clearMemos]], which the bench/probe harnesses drain
-    * between passes alongside the other family memos. */
-  private val survivorsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
-
-  // The memoized survivor frame goes through persistTracked, so ANY
-  // family's cold sweep (Dedup/Similarity/Selection clearMemos →
-  // TrackedPersist.clear) drops its blocks — register the map clear
-  // there too (the Selection.docwCache invariant, TrackedPersist.scala),
-  // or the memo would keep serving an unpersisted frame that silently
-  // recomputes the corpus-sized quality→pairs→label-prop build on
-  // every later action.
-  TrackedPersist.onClear(() => survivorsCache.clear())
-
-  def clearMemos(): Unit = {
-    survivorsCache.clear()
-    TrackedPersist.clear()
-  }
+    * (tiny — ≤ |docs| ids) survivor frame and the second reads it. */
+  private val survivorsMemo =
+    Memo.Family[(String, Double), DataFrame]("pipeline.survivors")
 
   private[ext] def survivingDocs(spark: SparkSession, dir: String,
-                                 threshold: Double = 0.8): DataFrame = {
-    survivorsCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(survivorsCache.remove)
+                                 threshold: Double = 0.8): DataFrame =
     // lazy persist, no eager count: the first consumer's own action
     // fills the cache as a side effect (an eager count here charged
     // q63 one extra job — +0.3 s on a canary-member gate), and the
     // second consumer reads the cached frame either way
-    survivorsCache.getOrElseUpdate((spark, dir, threshold),
+    survivorsMemo.get(spark, (dir, threshold))(
       survivingDocsUncached(spark, dir, threshold)
-        .transform(TrackedPersist.persistTracked))
-  }
+        .persist(MEMORY_AND_DISK))
 
   private def survivingDocsUncached(spark: SparkSession, dir: String,
                                     threshold: Double): DataFrame = {

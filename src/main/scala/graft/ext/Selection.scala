@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.Tables
 
 /** Data-selection operators: choosing WHICH documents to train on, as
@@ -84,51 +85,43 @@ object Selection {
     * are a per-corpus model artifact scored once and then consumed by
     * every selection policy (argmax q197, Gumbel resample q199, any
     * future stratified cut), not recomputed per query. Entries are
-    * persisted via [[TrackedPersist]] (drained with every family
-    * cold sweep) and ALSO sit under the broadcast top-k branch and the
+    * persisted and ALSO sit under the broadcast top-k branch and the
     * probe side of each selection join — the memo makes that shared
     * subtree compute once per corpus. */
   /** Key: (session, dir, dim, model id) where the model id encodes the
     * target definition — "lang:<l>" for the in-pool formulation,
     * "heldout-src:<s>" for the two-corpus one. */
-  private[ext] val docwCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int, String), DataFrame]()
-
-  // The memoized docw frame itself goes through persistTracked, so ANY
-  // family's cold sweep (Dedup/Similarity clearMemos → TrackedPersist
-  // .clear) drops its blocks — register the map clear there too, or the
-  // memo would keep serving an unpersisted frame that recomputes the
-  // corpus-sized feature build on every later action.
-  TrackedPersist.onClear(() => docwCache.clear())
-
-  /** Drop memoized weight tables AND their tracked blocks (benchmark
-    * cold-start hook; the TrackedPersist drain also clears this map
-    * via the onClear hook — idempotent). */
-  def clearMemos(): Unit = {
-    docwCache.clear()
-    TrackedPersist.clear()
-  }
+  private[ext] val docwMemo =
+    Memo.Family[(String, Int, String), DataFrame]("selection.docWeights")
 
   private def docWeightsCached(spark: SparkSession, dir: String, dim: Int,
                                targetLang: String): DataFrame =
     docWeightsCachedGen(spark, dir, dim, s"lang:$targetLang",
       col("lang") === targetLang, heldOut = false)
 
-  private def docWeightsCachedGen(spark: SparkSession, dir: String,
-                                  dim: Int, modelId: String,
-                                  isTarget: Column,
-                                  heldOut: Boolean): DataFrame = {
-    docwCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) docwCache.remove(key)
+  private[ext] def docWeightsCachedGen(spark: SparkSession, dir: String,
+                                       dim: Int, modelId: String,
+                                       isTarget: Column,
+                                       heldOut: Boolean): DataFrame = {
+    // the predicate is evaluated over the shared feature-count table,
+    // which carries only lang and source per doc: resolve it against
+    // exactly those columns so a violation fails here, by name
+    try spark.range(0).select(lit(null).cast("string").as("lang"),
+        lit(null).cast("string").as("source")).select(isTarget)
+    catch { case e: org.apache.spark.sql.AnalysisException =>
+      throw new IllegalArgumentException(
+        "DSIR isTarget may reference only lang/source (the per-doc " +
+          s"attributes of the shared feature-count table): ${e.getMessage}",
+        e)
     }
-    docwCache.getOrElseUpdate((spark, dir, dim, modelId),
+    docwMemo.get(spark, (dir, dim, modelId))(
       // lazy persist (the r16 q63 lesson: an eager count charges the
       // first consumer an extra job); the first gate's own action fills
       // the cache, and the shared featCounts memo below — not a
       // transient exploded frame — is what the scoring reads, so there
       // is nothing to release eagerly any more
       docWeights(spark, dir, dim, isTarget, heldOut)
-        .transform(TrackedPersist.persistTracked))
+        .persist(MEMORY_AND_DISK))
   }
 
   /** Per-(session, dir, dim) memo of the MODEL-INDEPENDENT feature-count
@@ -140,18 +133,13 @@ object Selection {
     * is a pure function of per-doc attributes (lang, source), so those
     * ride the groupBy keys (functionally dependent on doc_id) and each
     * model evaluates its own `tgt` over this one persisted table —
-    * per-model work drops from corpus-scale to featCounts-scale.
-    * Cleared with the family memos via the TrackedPersist hook. */
-  private val featCountsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int), DataFrame]()
-  TrackedPersist.onClear(() => featCountsCache.clear())
+    * per-model work drops from corpus-scale to featCounts-scale. */
+  private val featCountsMemo =
+    Memo.Family[(String, Int), DataFrame]("selection.featCounts")
 
   private def featCountsCached(spark: SparkSession, dir: String,
-                               dim: Int): DataFrame = {
-    featCountsCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) featCountsCache.remove(key)
-    }
-    featCountsCache.getOrElseUpdate((spark, dir, dim), {
+                               dim: Int): DataFrame =
+    featCountsMemo.get(spark, (dir, dim)) {
       val toks = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
                 filter(split(TextAnalysis.normalized(col("text")), " "),
@@ -169,9 +157,8 @@ object Selection {
           pmod(Sketches.hHex(col("bg"), 15), lit(dim.toLong)))
         .groupBy(col("doc_id"), col("lang"), col("source"), col("b"))
         .agg(count(lit(1)).as("c"))
-        .transform(TrackedPersist.persistTracked)
-    })
-  }
+        .persist(MEMORY_AND_DISK)
+    }
 
   /** The shared DSIR scoring stage: (doc_id, n_feats, logw @4dp),
     * plus the inner persisted feature frame for lifecycle control.

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
@@ -367,13 +368,13 @@ object Similarity {
     * bounded at 100 TB while the full corpus is still indexed. */
   private[ext] def trainCentroids(corpus: DataFrame, k: Int, iters: Int = 2,
                                   sampleMod: Int = 1): Array[Array[Double]] = {
+    var cents = centroids(corpus, k)
     val train = (if (sampleMod > 1)
         corpus.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
       else corpus)
       .select(l2normalize(col("embedding")).as("ne"))
       .cache()
-    var cents = centroids(corpus, k)
-    for (_ <- 1 to iters) {
+    try for (_ <- 1 to iters) {
       // r16 (guide §2.3): the per-cell element sums were a
       // posexplode of dim rows per vector into a (cell, pos) decimal
       // hash aggregation — one corpus-wide explode + exchange per
@@ -446,8 +447,7 @@ object Similarity {
         if (norm > 0) next(cell) = vec.map(_ / norm)
       }
       cents = next
-    }
-    train.unpersist()
+    } finally train.unpersist()
     cents
   }
 
@@ -508,16 +508,8 @@ object Similarity {
     * when the corpus is ingested, not retrained per query. Centroids are
     * K×dim driver-side doubles (bounded), so the memo holds no executor
     * state; entries for stopped sessions are swept on access. */
-  private val centroidCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int), Array[Array[Double]]]()
-
-  /** Drop memoized centroids and tracked inner persists (benchmark
-    * harness hook — lets a measurement pass retrain from the same cold
-    * state as a fresh session). */
-  def clearMemos(): Unit = {
-    centroidCache.clear()
-    TrackedPersist.clear()
-  }
+  private val centroidMemo =
+    Memo.Family[(String, Int), Array[Array[Double]]]("similarity.centroids")
 
   /** Probe hook (SCALE.md IVF-PQ cost anatomy): run ONLY the training
     * stage (coarse centroids + PQ codebooks), populating the memos the
@@ -532,31 +524,33 @@ object Similarity {
   }
 
   private def trainedCentroidsCached(spark: SparkSession, corpus: DataFrame,
-                                     dir: String, k: Int): Array[Array[Double]] = {
-    centroidCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) centroidCache.remove(key)
-    }
-    centroidCache.getOrElseUpdate((spark, dir, k), trainCentroids(corpus, k))
-  }
+                                     dir: String, k: Int): Array[Array[Double]] =
+    centroidMemo.get(spark, (dir, k))(trainCentroids(corpus, k))
 
   /** Cache key of the most recent [[ivfTopK]] call — the oracle dump
     * (written by Verify after the queries ran) reads the trained
     * centroids from the AUTHORITATIVE per-(session, dir, k)
-    * `centroidCache` entry under this key and embeds them as literals
+    * `centroidMemo` entry under this key and embeds them as literals
     * (same contract as Quantize). Last-call-wins is inherent in the
     * dir-less oracle contract; sourcing through the keyed cache keeps
     * the literals consistent with the run that populated them instead
     * of a second bare copy of the arrays. Training is deterministic
     * (decimal accumulation, see [[trainCentroids]]), so the literals
     * are a reproducible function of the table. */
-  @volatile private var lastIvfKey: (SparkSession, String, Int) = null
+  @volatile private var lastIvfKey: (SparkSession, (String, Int)) = null
+
+  /** The memoized centroids under a last-call oracle key, or null when
+    * the gate has not run in a live session. */
+  private def centroidsFor(
+      key: (SparkSession, (String, Int))): Array[Array[Double]] =
+    Option(key).flatMap { case (s, k) => centroidMemo.peek(s, k) }.orNull
 
   def ivfTopK(spark: SparkSession, dir: String, nQueries: Int = 5,
               k: Int = 10, numCells: Int = 24, nProbe: Int = 4,
               nAssign: Int = 3): DataFrame = {
     val corpus = Tables.load(spark, dir, "embeddings")
     val cents = trainedCentroidsCached(spark, corpus, dir, numCells)
-    lastIvfKey = (spark, dir, numCells)
+    lastIvfKey = (spark, (dir, numCells))
     val corpusCells = withIvfCellsMulti(corpus, col("embedding"), cents, nAssign)
       .select(col("vec_id").as("nid"), l2normalize(col("embedding")).as("ne"),
               col("cell"))
@@ -592,7 +586,7 @@ object Similarity {
 
   /** Cache key of the most recent [[ivfPqTopK]] call (oracle-literal
     * sourcing contract as [[lastIvfKey]]). */
-  @volatile private var lastIvfPqKey: (SparkSession, String, Int) = null
+  @volatile private var lastIvfPqKey: (SparkSession, (String, Int)) = null
 
   /** Per-(session, dir, numCells, nAssign) memo of the ENCODED corpus
     * index — (nid, cell, code_0..code_{M-1}) — the second half of the
@@ -602,34 +596,26 @@ object Similarity {
     * runs the whole q107 pipeline again, so one bench pass paid the
     * encode twice; a production system pays it per query batch).
     * 2-byte codes per vector: the persisted frame is the RAM-resident
-    * code index FAISS keeps — tiny relative to the raw vectors.
-    * Frames go through [[TrackedPersist]]; the onClear hook keeps this
-    * map from serving an unpersisted frame after any family's cold
-    * sweep. */
-  private val ivfPqIndexCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int, Int, Int), DataFrame]()
-  TrackedPersist.onClear(() => ivfPqIndexCache.clear())
+    * code index FAISS keeps — tiny relative to the raw vectors. */
+  private val ivfPqIndexMemo =
+    Memo.Family[(String, Int, Int, Int), DataFrame]("similarity.ivfPqIndex")
 
   private def ivfPqIndexCached(spark: SparkSession, dir: String,
                                corpus: DataFrame,
                                cents: Array[Array[Double]],
                                books: Array[Array[Array[Double]]],
                                numCells: Int, nAssign: Int): DataFrame = {
-    ivfPqIndexCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) ivfPqIndexCache.remove(key)
-    }
-    ivfPqIndexCache.getOrElseUpdate(
-        (spark, dir, numCells, nAssign,
-         books.length * 100000 + books.head.length), {
+    val bookShape = books.length * 100000 + books.head.length
+    ivfPqIndexMemo.get(spark, (dir, numCells, nAssign, bookShape)) {
       val codeParts = Quantize.pqCodeCols(books, Dim)
       val df = withIvfCellsMulti(corpus, col("embedding"), cents, nAssign)
         .select(col("vec_id").as("nid") +: col("cell") +:
           codeParts.zipWithIndex.map { case ((c, _), m) =>
             c.as(s"code_$m") }: _*)
-        .transform(TrackedPersist.persistTracked)
+        .persist(MEMORY_AND_DISK)
       df.count() // materialize eagerly: consumers reuse, never rebuild
       df
-    })
+    }
   }
 
   /** IVF-PQ ANN top-k — the FAISS `IVFx,PQy` architecture, the standard
@@ -663,7 +649,7 @@ object Similarity {
     val corpus = Tables.load(spark, dir, "embeddings")
     val cents = trainedCentroidsCached(spark, corpus, dir, numCells)
     val books = Quantize.trainedBooksCached(spark, corpus, dir, pqM, pqK)
-    lastIvfPqKey = (spark, dir, numCells)
+    lastIvfPqKey = (spark, (dir, numCells))
     // index side: multi-assigned cell + the M code columns, one
     // projection (everything is a codegen'd expression over embedding),
     // memoized + persisted per corpus — q107/q108 (and any later query
@@ -784,9 +770,9 @@ object Similarity {
     * `adc_d` column is hash-comparable. */
   def ivfPqOracleSql(nQueries: Int = 5, k: Int = 10, nProbe: Int = 4,
                      nAssign: Int = 3): String = {
-    val cents = Option(lastIvfPqKey).flatMap(centroidCache.get).orNull
+    val cents = centroidsFor(lastIvfPqKey)
     val books = Option(lastIvfPqKey)
-      .flatMap(key => Quantize.booksFor(key._1, key._2)).orNull
+      .flatMap { case (s, (d, _)) => Quantize.booksFor(s, d) }.orNull
     if (cents == null || books == null)
       "SELECT 'q107 oracle requires ivfPqTopK to run first' AS err"
     else {
@@ -943,7 +929,7 @@ object Similarity {
     * ~1e-8, top-k sim gaps are ~1e-4, so ranks cannot flip). */
   def ivfTopKOracleSql(nQueries: Int = 5, k: Int = 10, nProbe: Int = 4,
                        nAssign: Int = 3): String = {
-    val cents = Option(lastIvfKey).flatMap(centroidCache.get).orNull
+    val cents = centroidsFor(lastIvfKey)
     if (cents == null)
       "SELECT 'q37 oracle requires ivfTopK to run first' AS err"
     else {
@@ -1168,7 +1154,7 @@ object Similarity {
 
   /** Cache key of the most recent [[semDedup]] call (oracle-literal
     * sourcing contract as [[lastIvfKey]]). */
-  @volatile private var lastSemKey: (SparkSession, String, Int) = null
+  @volatile private var lastSemKey: (SparkSession, (String, Int)) = null
 
   /** SemDeDup — semantic deduplication (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic
@@ -1199,7 +1185,7 @@ object Similarity {
                threshold: Double = 0.35): DataFrame = {
     val corpus = Tables.load(spark, dir, "embeddings")
     val cents = trainedCentroidsCached(spark, corpus, dir, numCells)
-    lastSemKey = (spark, dir, numCells)
+    lastSemKey = (spark, (dir, numCells))
     // single (nearest-centroid) assignment; csim = that best dot
     // (argmax/tie semantics live in withIvfCellsCsim, mirrored by the
     // oracle's (d DESC, idx) row_number order). Persist: the frame
@@ -1208,7 +1194,7 @@ object Similarity {
     val assigned = withIvfCellsCsim(corpus, col("embedding"), cents)
       .select(col("vec_id"), l2normalize(col("embedding")).as("ne"),
               col("cell"), col("csim"))
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val l = assigned.select(col("cell"), col("vec_id").as("lid"),
                             col("ne").as("lne"), col("csim").as("lcs"))
     val r = assigned.select(col("cell"), col("vec_id").as("rid"),
@@ -1233,7 +1219,7 @@ object Similarity {
     * gate ran, [[lastIvfKey]] contract), exact sequential-fold dots, the
     * same argmax / dominance / threshold decisions. */
   def semDedupOracleSql(threshold: Double = 0.35): String = {
-    val cents = Option(lastSemKey).flatMap(centroidCache.get).orNull
+    val cents = centroidsFor(lastSemKey)
     if (cents == null)
       "SELECT 'q198 oracle requires semDedup to run first' AS err"
     else {

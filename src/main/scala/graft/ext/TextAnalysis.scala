@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.Tables
 
 /** Text-analysis operators for LLM-training-data pipelines, over the
@@ -311,7 +312,7 @@ object TextAnalysis {
   /** Per-(session, dir, nMerges) memo of the learned merge table — the
     * trainer artifact both q213 (the table itself) and q214 (the
     * encode) consume; like every model-artifact memo in this file
-    * (lmScoreCache, the IVF-PQ index) the training runs once per
+    * (lmScoreMemo, the IVF-PQ index) the training runs once per
     * corpus and each policy reads the result. The fold-chain cap and
     * batch size are deliberately NOT part of the key: they change
     * training COST only — BpeMergesSpec trains the same corpus at
@@ -319,21 +320,15 @@ object TextAnalysis {
     * identical (the batched selection's guards make the equality
     * structural, not empirical; see [[bpeTrainLoop]]) — so two callers
     * with different knobs share one artifact. The value is driver-side
-    * and tiny (k rows), but it still rides the [[TrackedPersist]]
-    * onClear hook so a cold sweep measures a full retrain. */
-  private[ext] val bpeMergeCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int),
-             Seq[(Long, String, String, Long)]]()
-  TrackedPersist.onClear(() => bpeMergeCache.clear())
+    * and tiny (k rows). */
+  private[ext] val bpeMergeMemo = Memo.Family[(String, Int),
+    Seq[(Long, String, String, Long)]]("text.bpeMerges")
 
   private def learnedMerges(spark: SparkSession, dir: String, nMerges: Int,
                             foldChainCap: Int = 4, batchSize: Int = 64)
       : Seq[(Long, String, String, Long)] = {
     require(nMerges >= 1, "nMerges must be positive")
-    bpeMergeCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) bpeMergeCache.remove(k)
-    }
-    bpeMergeCache.getOrElseUpdate((spark, dir, nMerges), {
+    bpeMergeMemo.get(spark, (dir, nMerges)) {
       val wordCounts = Tables.load(spark, dir, "documents")
         .select(explode(split(normalized(col("text")), " ")).as("w"))
         .filter(col("w") =!= "")
@@ -341,7 +336,7 @@ object TextAnalysis {
         .persist()
       try bpeTrainLoop(wordCounts, nMerges, foldChainCap, batchSize)
       finally { wordCounts.unpersist(); () }
-    })
+    }
   }
 
   /** Train on an EXPLICIT (w, n) vocabulary frame — the measurement
@@ -1136,34 +1131,25 @@ object TextAnalysis {
     lmScoredCached(spark, dir, trainLang, None)
 
   /** Per-(session, dir, trainLang, vocab-bound) memo of the scored
-    * (doc_id, n_bigrams, nll) frame — the q197 docwCache pattern: an
+    * (doc_id, n_bigrams, nll) frame — the q197 docwMemo pattern: an
     * LM score is a per-corpus model artifact computed once and then
     * consumed by every policy (the raw q118 score, the q202 terciles,
     * any future hard filter), not recomputed per consumer. The frame
-    * is corpus-row-count-sized but THREE columns wide; it rides
-    * [[TrackedPersist]], so any family's cold sweep drains it and the
-    * onClear hook keeps this map from serving an unpersisted frame. */
-  private[ext] val lmScoreCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, String, Int), DataFrame]()
-  TrackedPersist.onClear(() => lmScoreCache.clear())
+    * is corpus-row-count-sized but THREE columns wide. */
+  private[ext] val lmScoreMemo =
+    Memo.Family[(String, String, Int), DataFrame]("text.lmScore")
 
   private def lmScoredCached(spark: SparkSession, dir: String,
                              trainLang: String,
-                             topV: Option[Int]): DataFrame = {
-    lmScoreCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) lmScoreCache.remove(k)
+                             topV: Option[Int]): DataFrame =
+    lmScoreMemo.get(spark, (dir, trainLang, topV.getOrElse(-1))) {
+      val (bi, bc, hc, v) = bigramLmParts(spark, dir, trainLang, topV)
+      val p = lmScoreTail(bi, bc, hc, v).persist(MEMORY_AND_DISK)
+      // materialize eagerly so the corpus-sized bigram explode can be
+      // garbage-collected; only the skinny score table stays cached
+      p.count()
+      p
     }
-    lmScoreCache.getOrElseUpdate(
-      (spark, dir, trainLang, topV.getOrElse(-1)), {
-        val (bi, bc, hc, v) = bigramLmParts(spark, dir, trainLang, topV)
-        val p = lmScoreTail(bi, bc, hc, v)
-          .transform(TrackedPersist.persistTracked)
-        // materialize eagerly so the corpus-sized bigram explode can be
-        // garbage-collected; only the skinny score table stays cached
-        p.count()
-        p
-      })
-  }
 
   /** Sentinel the bounded-vocab LM maps out-of-vocabulary tokens to —
     * cannot collide with a real token ([[normalized]] strips everything
@@ -1300,9 +1286,9 @@ object TextAnalysis {
     // three consumers (tie-group bases, per-lang totals, the ranked
     // rows) read the scored frame — persist the skinny (doc, lang,
     // n_bigrams, nll) result once instead of running the LM scoring
-    // joins three times; drained by any family's cold sweep
+    // joins three times
     val d = scored.join(langs, "doc_id")
-      .transform(TrackedPersist.persistTracked)
+      .persist(MEMORY_AND_DISK)
     val byLang = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("nll"))
       .rowsBetween(org.apache.spark.sql.expressions.Window

@@ -141,7 +141,10 @@ object Partitioning {
     withShufflePartitions(spark, n) {
       val df = build
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // plan + run inside the scope; consumers reuse the cache
+      // plan + run inside the scope; consumers reuse the cache, and a
+      // failed build does not leave its persist registered
+      try df.count()
+      catch { case e: Throwable => df.unpersist(); throw e }
       df
     }
 }

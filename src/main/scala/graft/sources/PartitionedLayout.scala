@@ -27,15 +27,6 @@ object PartitionedLayout {
   private val partitionedWritten =
     scala.collection.mutable.Set.empty[(SparkSession, String)]
 
-  /** Drop both fixture-write memos (fixture-freshness hook: call after
-    * regenerating the SOURCE testdata mid-session so the derived
-    * layouts rebuild from the fresh tables; driver runs fork a new JVM
-    * per round, so they never need this). */
-  def clearLayoutMemos(): Unit = synchronized {
-    partitionedWritten.clear()
-    vintagesWritten.clear()
-  }
-
   /** Write events partitioned by day under a scratch base (memoized
     * per (session, dir)); returns the base path. */
   private[sources] def writePartitioned(spark: SparkSession,

@@ -698,17 +698,6 @@ object Streams {
        |HAVING max(ts) + INTERVAL 30 MINUTE
        |       < (SELECT max(ts) - INTERVAL $watermarkHours HOUR FROM events)""".stripMargin
 
-  /** Oracle for [[dedupHourlyAvailableNow]]: the batch hourly rollup,
-    * restricted to the windows append mode has emitted (end at or
-    * before the final watermark). */
-  def dedupHourlyOracleSql(watermarkHours: Int = 2): String =
-    s"""SELECT date_trunc('hour', ts) AS h, event_type,
-       |  count(*) AS n, round(sum(value), 2) AS sum_value
-       |FROM events
-       |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
-       |      <= (SELECT max(ts) - INTERVAL $watermarkHours HOUR FROM events)
-       |GROUP BY 1, 2""".stripMargin
-
   /** Bounded gate run of the streaming dedup: the events stream unioned
     * with itself simulates an at-least-once source redelivering every
     * event; `dropDuplicatesWithinWatermark` must collapse the stream

@@ -525,22 +525,22 @@ class DedupSpec extends SparkSpec {
     assert(a eq b)
   }
 
-  test("clearMemos drains the INNER persists (signature/shingle frames), not just the memoized tables") {
-    // other suites share this session and may hold their own persists —
-    // assert on the DELTA this build adds, not on global emptiness
-    Dedup.clearMemos()
+  test("Memo.clearAll drains the INNER persists (signature/shingle frames)") {
+    // assert on the DELTA this build adds: the inner frames must go,
+    // not just the memoized tables
+    Memo.clearAll(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Dedup.minhashLsh(spark, sfDir).count()
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty,
       "expected inner persisted frames (shingles + signatures) after an LSH build")
-    Dedup.clearMemos()
+    Memo.clearAll(spark)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     // every frame the build persisted must be gone — a 'cold'
     // measurement pass that rebuilds the identical signatures plan must
     // NOT hit warm blocks
     assert((added & after).isEmpty,
-      s"inner persists survived clearMemos: ids ${(added & after).mkString(",")}")
+      s"inner persists survived Memo.clearAll: ids ${(added & after).mkString(",")}")
   }
 
   test("minhash-LSH vs brute-force exact pairs: precision exactly 1, recall floor") {
@@ -632,18 +632,17 @@ class DedupSpec extends SparkSpec {
     // corpus-wide scope (minhash/simhash/estimate) and the per-source
     // scope (jaccard/containment) — r10 paid two full scans per cold
     // corpus.
-    Dedup.clearMemos()
-    assert(Dedup.dupFracCache.isEmpty)
+    Memo.clearAll(spark)
+    assert(Dedup.dupFracMemo.keys(spark).isEmpty)
     Dedup.dupFractionDir(spark, sfDir, Nil)
-    val scopes = Dedup.dupFracCache.keys
-      .collect { case (s, d, _, _, scope) if s == spark && d == sfDir =>
-        scope }
+    val scopes = Dedup.dupFracMemo.keys(spark)
+      .collect { case (d, _, _, scope) if d == sfDir => scope }
       .toSet
     assert(scopes == Set("", "source"),
       s"one probe must fill both scopes, got $scopes")
     // and the source-scope read is a pure cache hit (same map entry)
-    val before = Dedup.dupFracCache(
-      (spark, sfDir, 1.0, Dedup.ExactDistinctThreshold, "source"))
+    val before = Dedup.dupFracMemo.peek(spark,
+      (sfDir, 1.0, Dedup.ExactDistinctThreshold, "source")).get
     assert(Dedup.dupFractionDir(spark, sfDir, Seq("source")) == before)
   }
 
@@ -651,9 +650,9 @@ class DedupSpec extends SparkSpec {
     val prev = spark.conf.getOption(Dedup.ProbeSampleKey)
     try {
       spark.conf.set(Dedup.ProbeSampleKey, "0.5")
-      Dedup.clearMemos()
+      Memo.clearAll(spark)
       val v1 = Dedup.dupFractionDir(spark, sfDir, Nil)
-      Dedup.clearMemos()
+      Memo.clearAll(spark)
       val v2 = Dedup.dupFractionDir(spark, sfDir, Nil)
       // md5(doc_id)-keyed sampling: same rows every run, any layout
       assert(v1 == v2, "sampled probe must be deterministic")
@@ -665,15 +664,15 @@ class DedupSpec extends SparkSpec {
       // it re-probes under its own key, leaving both entries live
       spark.conf.unset(Dedup.ProbeSampleKey)
       Dedup.dupFractionDir(spark, sfDir, Nil)
-      val fracs = Dedup.dupFracCache.keys.collect {
-        case (s, d, f, _, "") if s == spark && d == sfDir => f
+      val fracs = Dedup.dupFracMemo.keys(spark).collect {
+        case (d, f, _, "") if d == sfDir => f
       }.toSet
       assert(fracs == Set(0.5, 1.0),
         s"probe memo must be keyed by sample fraction, got $fracs")
     } finally {
       prev.fold(spark.conf.unset(Dedup.ProbeSampleKey))(v =>
         spark.conf.set(Dedup.ProbeSampleKey, v))
-      Dedup.clearMemos()
+      Memo.clearAll(spark)
     }
   }
 

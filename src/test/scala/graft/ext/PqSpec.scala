@@ -50,9 +50,9 @@ class PqSpec extends SparkSpec {
   }
 
   test("encoding is deterministic across runs") {
-    Quantize.clearMemos()
+    Memo.clearAll(spark)
     val a = Quantize.pqCodes(spark, sfDir).collect().map(_.toString).sorted
-    Quantize.clearMemos()
+    Memo.clearAll(spark)
     val b = Quantize.pqCodes(spark, sfDir).collect().map(_.toString).sorted
     assert(a.toSeq == b.toSeq)
   }

@@ -160,23 +160,42 @@ class SelectionSpec extends SparkSpec {
       "held-out and in-pool formulations must differ on the fixture")
   }
 
-  test("another family's cold sweep cannot strand the docw memo") {
-    // TrackedPersist.clear() is GLOBAL: a Dedup/Similarity cold sweep
-    // drops the docw frame's blocks. The memo must be invalidated with
-    // them — otherwise it keeps serving an unpersisted frame and every
-    // later selection action silently recomputes the corpus-sized
-    // feature build (the round-10 ADVICE finding).
+  test("after Memo.clearAll the docw memo rebuilds a persisted frame") {
+    // the cold sweep drops the docw frame's blocks; the memo must be
+    // invalidated with them — otherwise it keeps serving an unpersisted
+    // frame and every later selection action silently recomputes the
+    // corpus-sized feature build (the round-10 ADVICE finding)
     Selection.dsirSelect(spark, sfDir, k = 5).count()
-    assert(Selection.docwCache.nonEmpty, "memo populated by the call")
-    Dedup.clearMemos() // ANOTHER family's sweep
-    assert(Selection.docwCache.isEmpty,
-      "TrackedPersist.clear() must invalidate the docw memo it drained")
+    assert(Selection.docwMemo.keys(spark).nonEmpty,
+      "memo populated by the call")
+    Memo.clearAll(spark)
+    assert(Selection.docwMemo.keys(spark).isEmpty,
+      "Memo.clearAll must invalidate the docw memo it drained")
     // and a fresh call rebuilds a genuinely persisted entry
     Selection.dsirSelect(spark, sfDir, k = 5).count()
-    val rebuilt = Selection.docwCache.values.head
+    val rebuilt = Selection.docwMemo.keys(spark)
+      .flatMap(Selection.docwMemo.peek(spark, _)).head
     assert(rebuilt.storageLevel !=
              org.apache.spark.storage.StorageLevel.NONE,
       "rebuilt docw frame must be persisted, not a stranded plan")
-    Selection.clearMemos()
+    Memo.clearAll(spark)
+  }
+
+  test("the DSIR target predicate may reference only lang/source") {
+    // both shipped models resolve: the in-pool lang model and the
+    // held-out source model
+    assert(Selection.dsirSelect(spark, fixtureDir, dim = 64, k = 1)
+      .count() == 6)
+    assert(Selection.dsirSelectHeldout(spark, fixtureDir, dim = 64, k = 1,
+      targetSource = "s0").count() == 4)
+    // a predicate on any other column fails with the contract, before
+    // any plan is built over the feature-count table
+    val e = intercept[IllegalArgumentException] {
+      Selection.docWeightsCachedGen(spark, fixtureDir, 64, "text:alpha",
+        col("text").contains("alpha"), heldOut = false)
+    }
+    assert(e.getMessage.contains("isTarget may reference only lang/source"),
+      e.getMessage)
+    assert(e.getMessage.contains("text"), e.getMessage)
   }
 }

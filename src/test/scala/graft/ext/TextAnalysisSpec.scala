@@ -251,16 +251,16 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("LM score memo: one scoring pass per corpus; sweep-safe, keyed by bound") {
-    graft.ext.TrackedPersist.clear() // also clears lmScoreCache via hook
+    Memo.clearAll(spark)
     val a = TextAnalysis.bigramLmScore(spark, sfDir)
     assert(TextAnalysis.bigramLmScore(spark, sfDir) eq a,
       "second consumer must ride the memoized scored frame")
     assert(!(TextAnalysis.bigramLmScoreBounded(spark, sfDir) eq a),
       "bounded and open vocab are different models, different entries")
-    // another family's cold sweep unpersists tracked frames — the memo
-    // must drop its entry rather than serve an unpersisted frame that
-    // silently recomputes the corpus scoring on every later action
-    graft.ext.Dedup.clearMemos()
+    // the cold sweep unpersists every frame — the memo must drop its
+    // entry rather than serve an unpersisted frame that silently
+    // recomputes the corpus scoring on every later action
+    Memo.clearAll(spark)
     val fresh = TextAnalysis.bigramLmScore(spark, sfDir)
     assert(!(fresh eq a), "cold sweep must invalidate the memo")
     assert(fresh.storageLevel.useMemory || fresh.storageLevel.useDisk,

@@ -21,13 +21,7 @@ object ProbePq {
       println(f"[probe] $label%-34s $s%6.2fs  rows=$n")
       s
     }
-    def coldStart(): Unit = {
-      graft.ext.Similarity.clearMemos()
-      graft.ext.Quantize.clearMemos()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    def coldStart(): Unit = graft.ext.Memo.clearAll(spark)
     for (pass <- 1 to 3) {
       coldStart()
       // stage-isolated: train, then q107 (encode+query), then warm q107

@@ -18,10 +18,7 @@ object ProbeSig {
     }
     val docs = graft.Tables.load(spark, dir, "documents")
     for (pass <- 1 to 3) {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      graft.ext.Dedup.clearMemos()
+      graft.ext.Memo.clearAll(spark)
       val sh = graft.ext.Dedup.shingledOf(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       t(s"p$pass shingle build")(sh.count())

@@ -30,17 +30,8 @@ object QueryProbe {
     args.foreach { name =>
       val fn = queries(name)
       val times = (1 to reps).map { _ =>
-        // drain EVERY family memo (mirrors Bench's cold-start sweep) —
-        // a missing drain times a warm scoring table as if cold
-        graft.ext.Dedup.clearMemos()
-        graft.ext.Similarity.clearMemos()
-        graft.ext.Quantize.clearMemos()
-        graft.ext.Winnow.clearMemos()
-        graft.ext.PageRank.clearMemos()
-        graft.ext.Selection.clearMemos()
-        graft.ext.Pipeline.clearMemos()
-        spark.sharedState.cacheManager.clearCache()
-        graft.streaming.Streams.dropBoundedSinks(spark)
+        // Bench's cold-start sweep: every memo and persisted block
+        graft.ext.Memo.clearAll(spark)
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9 -> n

@@ -510,22 +510,7 @@ object ScaleSmoke {
     // centroid memos) would make the 1x side a cache HIT while the 10x
     // side computes cold — clear every memo/persist before each timed
     // run so both sides measure a full recompute.
-    def coldStart(): Unit = {
-      graft.ext.Dedup.clearMemos()
-      graft.ext.Similarity.clearMemos()
-      graft.ext.Quantize.clearMemos()
-      graft.ext.Winnow.clearMemos()
-      graft.ext.PageRank.clearMemos()
-      graft.ext.Selection.clearMemos()
-      graft.ext.Pipeline.clearMemos()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // streaming gates leave their memory-sink row buffers behind the
-      // graft_stream_* temp views — additive across a sweep (the 100×
-      // leg OOMed the driver before this drop existed)
-      graft.streaming.Streams.dropBoundedSinks(spark)
-    }
+    def coldStart(): Unit = graft.ext.Memo.clearAll(spark)
     // streamcost mode: cold A/B of the six fixed-cost streaming gates
     // (the ~15 s/window family the round-15 verdict flagged as
     // harness-not-plans) across the bounded-run machinery variants
