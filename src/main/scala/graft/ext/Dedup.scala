@@ -1409,8 +1409,20 @@ object Dedup {
     * pipeline's shingle table.
     *
     * Scale: one fp-keyed shuffle of 24-byte rows over the corpus, then
-    * shingle/signature work over DISTINCT docs only. */
-  private[graft] def nearDupIndexOf(docs: DataFrame): DataFrame = {
+    * shingle/signature work over DISTINCT docs only. The index is
+    * persisted: a probe reads it twice (band join and verify join). */
+  private[graft] def nearDupIndexOf(docs: DataFrame): DataFrame =
+    nearDupIndexHeld(docs).df
+
+  /** A lazy frame together with the frames persisted to build it.
+    * [[use]] is for callers that write or materialize the frame: it
+    * releases the persists once they are done, or have thrown. */
+  private final case class Held(df: DataFrame, persisted: Seq[DataFrame]) {
+    def use[T](f: DataFrame => T): T =
+      try f(df) finally persisted.foreach(_.unpersist(blocking = false))
+  }
+
+  private def nearDupIndexHeld(docs: DataFrame): Held = {
     val groups = docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -1426,9 +1438,11 @@ object Dedup {
       .select(col("doc_id").as("min_id"), col("shingles"),
         graft.functions.MinHashSig.minhashSig(
           col("shingles"), perms.map(_._1), perms.map(_._2)).as("sig"))
-    groups.join(repIdx, Seq("min_id"))
+    val index = groups.join(repIdx, Seq("min_id"))
       .select(col("fp"), col("n_docs"), col("min_id"), col("shingles"),
               col("sig"))
+      .persist(MEMORY_AND_DISK)
+    Held(index, Seq(groups, index))
   }
 
   /** Probe a NEW (doc_id, text) batch against a standing
@@ -1449,8 +1463,15 @@ object Dedup {
     * per-doc answer because identical normalized text ⇒ identical
     * shingles ⇒ identical band keys and jaccard. */
   private[graft] def probeNearDupIndex(index: DataFrame, batch: DataFrame,
-                                       threshold: Double): DataFrame = {
-    val idx = index.persist(MEMORY_AND_DISK)
+                                       threshold: Double): DataFrame =
+    probeNearDupIndexHeld(index, batch, threshold).df
+
+  // `index` is not persisted here: a built index arrives persisted
+  // ([[nearDupIndexOf]]), and a cached scan of a parquet path would be
+  // served, with this probe's file listing, to every other reader of
+  // that path in the session, a concurrent compaction included
+  private def probeNearDupIndexHeld(idx: DataFrame, batch: DataFrame,
+                                    threshold: Double): Held = {
     // ONE normalize+md5 pass over the batch, shared by the rep
     // grouping and the final expansion join (it used to be recomputed
     // in the tail projection — a second full scan of the delta per
@@ -1492,12 +1513,12 @@ object Dedup {
       .groupBy(col("bfp"))
       .agg(sum(col("n_docs")).as("n_dups"),
            min(col("min_id")).as("match_id"))
-    bAll
+    Held(bAll
       .join(matches, Seq("bfp"), "left_outer")
       .select(col("doc_id"),
               col("n_dups").isNull.cast("int").cast("long").as("novel"),
               coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-              col("match_id"))
+              col("match_id")), Seq(bAll, bRepSh))
   }
 
   /** Incremental NEAR-dup admission — the daily-ingest companion of
@@ -1672,7 +1693,7 @@ object Dedup {
     * (parquet, overwrite). One row per distinct normalized-text
     * fingerprint — see [[nearDupIndexOf]] for the collapse contract. */
   def nearDupIndexWrite(corpus: DataFrame, path: String): Unit =
-    nearDupIndexOf(corpus).write.mode("overwrite").parquet(path)
+    nearDupIndexHeld(corpus).use(_.write.mode("overwrite").parquet(path))
 
   // ---- concurrency contract -------------------------------------------
   //
@@ -1758,6 +1779,8 @@ object Dedup {
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
         .exists { c =>
           c.isInstanceOf[java.io.FileNotFoundException] ||
+          // the local checksum layer opens a `.crc` through java.nio
+          c.isInstanceOf[java.nio.file.NoSuchFileException] ||
           Option(c.getMessage).exists(m =>
             m.contains("PATH_NOT_FOUND") || m.contains("FileNotFound"))
         }
@@ -1770,9 +1793,9 @@ object Dedup {
                    else None
       target match {
         case Some(t) =>
-          try result = probeNearDupIndex(
+          try result = probeNearDupIndexHeld(
               spark.read.parquet(t.toString), batch, threshold)
-              .localCheckpoint(true)
+              .use(_.localCheckpoint(true))
           catch {
             case e: Throwable if isTransientPathError(e) =>
               last = e; Thread.sleep(backoffMs)
@@ -1810,13 +1833,14 @@ object Dedup {
                         batch: DataFrame, threshold: Double,
                         probeOutPath: String): DataFrame =
     withIndexLease(spark, indexPath, "admit") {
-      probeNearDupIndex(spark.read.parquet(indexPath), batch, threshold)
-        .write.mode("overwrite").parquet(probeOutPath)
+      probeNearDupIndexHeld(spark.read.parquet(indexPath), batch, threshold)
+        .use(_.write.mode("overwrite").parquet(probeOutPath))
       val probed = spark.read.parquet(probeOutPath)
       val admitted = batch.join(
         probed.filter(col("novel") === 1L).select("doc_id"),
         Seq("doc_id"), "left_semi")
-      nearDupIndexOf(admitted).write.mode("append").parquet(indexPath)
+      nearDupIndexHeld(admitted)
+        .use(_.write.mode("append").parquet(indexPath))
       probed
     }
 

@@ -28,6 +28,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * ahead of the O(|a|·|b|) dynamic program. The rule is idempotent, so
   * sessions that ALSO register it via `experimental.extraOptimizations`
   * (the live-session fallback `ext.Fuzzy` uses) are unaffected.
+  *
+  * And installs [[graft.sources.LocalFs]] as the `file:` file system of
+  * FileContext (`fs.AbstractFileSystem.file.impl` on the SparkContext's
+  * Hadoop configuration), the fork-free local store every streaming
+  * checkpoint is written through. It runs from a check-rule builder,
+  * which receives the session when its analyzer is built, so before the
+  * session analyzes its first plan. A value a deployment set to anything
+  * but Hadoop's default `org.apache.hadoop.fs.local.LocalFs` is kept.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -43,6 +51,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.EditDistanceBandRule)
+    ext.injectCheckRule { session =>
+      graft.sources.LocalFs.install(session.sparkContext.hadoopConfiguration)
+      _ => ()
+    }
     ext.injectFunction((FunctionIdentifier("hash_shingles"),
       info("hash_shingles",
         "hash_shingles(words, n) - sorted distinct xxhash64 n-gram shingles"),

@@ -164,19 +164,22 @@ object Sources {
     * deployment — and local recursion would count _SUCCESS/.crc
     * metadata into the estimate). Shared by every sized rewrite
     * ([[compactParquet]], [[ZOrder.zorderWrite]]) so the sizing rule
-    * can never silently diverge between them. */
+    * can never silently diverge between them. A plain recursive
+    * `listStatus`: `listFiles` builds a `LocatedFileStatus` per file,
+    * which reads its permission (an `ls -ld` fork per file on a local
+    * file system without libhadoop) and its block locations (an RPC
+    * per file on HDFS), neither of which a byte sum needs. */
   private[sources] def parquetInputBytes(spark: SparkSession,
                                          path: String,
                                          caller: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"$caller: input path does not exist: $path")
-    val it = fs.listFiles(p, true)
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
-    }
+    def bytesUnder(st: org.apache.hadoop.fs.FileStatus): Long =
+      if (st.isDirectory) fs.listStatus(st.getPath).map(bytesUnder).sum
+      else if (st.getPath.getName.endsWith(".parquet")) st.getLen
+      else 0L
+    val bytes = bytesUnder(fs.getFileStatus(p))
     require(bytes > 0, s"$caller: no parquet files under $path")
     bytes
   }

@@ -285,6 +285,22 @@ class NearDupIndexSpec extends SparkSpec {
     assert(durable.nonEmpty)
   }
 
+  test("durable gate releases its build persists; only probe 2's " +
+       "local checkpoint stays behind") {
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted()
+    val out = Dedup.nearDupIndexDurableGate(spark, sfDir)
+    val added = persisted() -- before
+    val checkpointed = out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(added.size == 1 && checkpointed == added.toSeq,
+      s"persisted RDDs added: $added; the frame reads $checkpointed")
+    assert(out.count() > 0)
+    spark.sparkContext.getPersistentRDDs(added.head)
+      .unpersist(blocking = false)
+  }
+
   test("the composed two-batch gate output is internally consistent") {
     val out = Dedup.nearDupIndexTwoBatch(spark, sfDir)
       .collect()

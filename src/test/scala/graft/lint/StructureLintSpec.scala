@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Operator state has one home: `graft.ext.Memo`. Session-keyed memo
   * maps, per-family `clearMemos` hooks and the retired persist registry
-  * must not reappear elsewhere in the main sources. */
+  * must not reappear elsewhere in the main sources. Nor may Hadoop's
+  * `listFiles`, whose per-file `LocatedFileStatus` forks an `ls -ld` on
+  * a local file system without libhadoop. */
 class StructureLintSpec extends AnyFunSuite {
 
   private val MemoFile = "Memo.scala"
@@ -56,5 +58,16 @@ class StructureLintSpec extends AnyFunSuite {
       case (f, text) if text.contains("TrackedPersist") => f.getPath
     }
     assert(bad.isEmpty, s"TrackedPersist mentioned in $bad")
+  }
+
+  test("no Hadoop listFiles in the main sources") {
+    // Hadoop's listFiles(path, recursive) takes arguments;
+    // java.io.File.listFiles() does not
+    val hadoopListFiles = """\.listFiles\(\s*[^)\s]""".r
+    val bad = mainSources.collect {
+      case (f, text) if hadoopListFiles.findFirstIn(text).isDefined =>
+        f.getPath
+    }
+    assert(bad.isEmpty, s"sum or walk with listStatus instead: $bad")
   }
 }

@@ -17,6 +17,7 @@ object QueryProbe {
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same warmup as Bench so the first query isn't charged JIT cost

@@ -33,6 +33,7 @@ object StreamProbe {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // warm the streaming machinery only (state store, file source, JIT)
